@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import graft.expressions.{CharGramHashes, CosineSimilarity, CountMinEstimate,
-  CountMinSketchAgg, HyperplaneSignature, KMVSketch, Md5Prefix64, MisraGries,
-  SquaredDistance, UnicodeNormalize, WinnowFingerprints, WordNGrams}
+  CountMinSketchAgg, HyperplaneSignature, KMVSketch, LevenshteinWithin,
+  Md5Prefix64, MisraGries, SquaredDistance, UnicodeNormalize,
+  WinnowFingerprints, WordNGrams}
 
 /** SparkSessionExtensions entry point: makes the library's custom
   * Catalyst expressions available to ANY session (SQL included) via
@@ -63,6 +64,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         "char_gram_hashes(text, k) - md5-prefix of every k-char gram"),
       (exprs: Seq[Expression]) => CharGramHashes(exprs(0),
         intArg(exprs(1), "k"))))
+    ext.injectFunction((FunctionIdentifier("levenshtein_within"),
+      info("levenshtein_within",
+        "levenshtein_within(l, r, k) - edit distance if <= k, else -1"),
+      (exprs: Seq[Expression]) => LevenshteinWithin(exprs(0), exprs(1),
+        intArg(exprs(2), "k"))))
     ext.injectFunction((FunctionIdentifier("md5_prefix64"),
       info("md5_prefix64",
         "md5_prefix64(s) - first 64 bits of md5(s) as a signed long"),

@@ -94,14 +94,16 @@ object PeerPercentile {
 
   /** True if any row would land on the global 'all' fallback — i.e. some
     * row's outer group is smaller than minPeers or has a null outer key.
-    * One cheap aggregate; lets callers drop the single-partition global
-    * window from the plan when it cannot be reached. */
+    * One cheap aggregate, one Spark action; lets callers drop the
+    * single-partition global window from the plan when it cannot be
+    * reached. Rows with a null outer key group together under that
+    * key, so `min(keysOk)` is false exactly for those groups. */
   def needsGlobalLevel(df: org.apache.spark.sql.DataFrame,
       outer: Seq[Column], minPeers: Int = 5): Boolean = {
     val outerKeysOk = outer.map(_.isNotNull).reduce(_ && _)
-    if (df.filter(!outerKeysOk).limit(1).count() > 0) true
-    else !df.groupBy(outer: _*).count()
-      .filter(col("count") < minPeers).isEmpty
+    !df.groupBy(outer: _*)
+      .agg(count(lit(1)).as("n"), min(outerKeysOk).as("keys_ok"))
+      .filter(!col("keys_ok") || col("n") < minPeers).isEmpty
   }
 
   /** Which fallback level a row lands in — the reference logs this

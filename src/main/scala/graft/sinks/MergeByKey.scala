@@ -1,8 +1,12 @@
 package graft.sinks
 
+import java.util.concurrent.TimeoutException
+import scala.concurrent.Await
+import scala.concurrent.duration._
 import org.apache.hadoop.fs.{FileContext, Options, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** S7 — upsert ("merge-by-key") sink over parquet directories
   * (SURVEY.md §2.1 S7; ref uploadtodb.py:159-198 batched REST upsert).
@@ -22,10 +26,11 @@ import org.apache.spark.sql.functions._
   *
   * Store layout:
   * {{{
-  *   path/v=N/          immutable, fully-written version directories
-  *   path/_manifest     tiny file holding the committed version number N
-  *   path/.stage-<uuid> invisible per-writer staging dirs (pre-claim)
-  *   path/_legacy       migration tombstone: pre-versioned entries to GC
+  *   path/v=N/                  immutable, fully-written version directories
+  *   path/v=N/_graft_committed  commit record: the written schema as JSON
+  *   path/_manifest             tiny file holding the committed version number N
+  *   path/.stage-<uuid>         invisible per-writer staging dirs (pre-claim)
+  *   path/_legacy               migration tombstone: pre-versioned entries to GC
   * }}}
   * A writer stages version N+1 COMPLETELY in a private `.stage-<uuid>`
   * directory, then CLAIMS the version with an atomic
@@ -70,6 +75,17 @@ import org.apache.spark.sql.functions._
   * entries only — foreign files or directories under the store root
   * are never touched.
   *
+  * Reads: the commit record holds the schema the writer used
+  * (`StructType.json`), so [[readCommitted]] and [[readVersion]] pass
+  * it to `spark.read.schema(...)` and start no Spark job — schema
+  * inference would run one to read a parquet footer. Inference remains
+  * only where no schema was recorded: legacy flat stores, and versions
+  * whose record predates the schema (content `committed`).
+  *
+  * Writes: one commit is one Spark action, the parquet write. The
+  * [[MergeStats]] row counts come from two `Observation`s on that
+  * write (incoming rows, written rows), not from recounting passes.
+  *
   * Scale: the merge is one full-outer shuffle join on the key. For
   * repeated merges at 100 TB the existing side should be bucketed by the
   * key (`bucketBy` on write) so the join co-locates without re-shuffling
@@ -105,6 +121,29 @@ object MergeByKey {
     * extra pass. */
   case class MergeStats(incomingRows: Long, mergedRows: Long)
 
+  /** How long a commit waits for its write's observed row counts; they
+    * arrive with the query-completion event, normally within
+    * milliseconds. Past this, the count is taken by a recount pass. */
+  private val ObservationWait = 10.seconds
+
+  /** Attach a row count to `df`, reported when the action writing it
+    * completes. */
+  private def observeRows(df: DataFrame): (DataFrame, Observation) = {
+    val obs = Observation()
+    (df.observe(obs, count(lit(1)).as("rows")), obs)
+  }
+
+  /** The row count an observation reported. An observation that reports
+    * no metric is 0 rows: the optimizer only prunes an observed subtree
+    * it has proven empty (e.g. an empty incoming side of the full-outer
+    * merge). A count that does not arrive within [[ObservationWait]]
+    * falls back to `recount`. */
+  private def observedRows(obs: Observation)(recount: => Long): Long =
+    try {
+      val row = Await.result(obs.future, ObservationWait)
+      if (row.length == 0) 0L else row.getLong(0)
+    } catch { case _: TimeoutException => recount }
+
   private def fs(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -133,7 +172,7 @@ object MergeByKey {
     * stores keep resolving until their first versioned commit. */
   def readCommitted(spark: SparkSession, path: String): DataFrame =
     committedVersion(spark, path) match {
-      case Some(v) => spark.read.parquet(s"$path/v=$v")
+      case Some(v) => readVersionDir(spark, new Path(s"$path/v=$v"))
       case None => spark.read.parquet(path)
     }
 
@@ -144,12 +183,29 @@ object MergeByKey {
     * creates a `v=K` dir (K < head) holding UNCOMMITTED merge output
     * until its recheck deletes it — without the record, a concurrent
     * time-travel read of K would return that wrong data as committed
-    * history (r18 ADVICE, medium). */
+    * history (r18 ADVICE, medium). Its content is the written schema
+    * as JSON; records from before the schema was stored read
+    * `committed`. */
   private val CommitRecord = "_graft_committed"
 
-  private def writeCommitRecord(spark: SparkSession, dir: Path): Unit = {
+  private def writeCommitRecord(spark: SparkSession, dir: Path,
+      schema: StructType): Unit = {
     val out = fs(spark, dir.toString).create(new Path(dir, CommitRecord), true)
-    try out.write("committed".getBytes("UTF-8")) finally out.close()
+    try out.write(schema.json.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** Read one version directory with the schema its commit record
+    * holds; without one (no record, or a pre-schema `committed`
+    * record) Spark infers the schema from a parquet footer. */
+  private def readVersionDir(spark: SparkSession, dir: Path): DataFrame = {
+    val record = new Path(dir, CommitRecord)
+    val recorded =
+      if (fs(spark, dir.toString).exists(record)) readFully(spark, record).trim
+      else ""
+    if (recorded.startsWith("{"))
+      spark.read.schema(DataType.fromJson(recorded).asInstanceOf[StructType])
+        .parquet(dir.toString)
+    else spark.read.parquet(dir.toString)
   }
 
   /** TIME-TRAVEL read: resolve a specific historical version of the
@@ -184,7 +240,7 @@ object MergeByKey {
             .filter(n => n == s"v=$cur" ||
               f.exists(new Path(s"$path/$n/$CommitRecord")))
             .sortBy(_.stripPrefix("v=").toLong).mkString(", "))
-    spark.read.parquet(dir.toString)
+    readVersionDir(spark, dir)
   }
 
   /** KEYED DIFF between two committed versions — the CDC read the
@@ -401,7 +457,7 @@ object MergeByKey {
     * the merge against the NEW committed snapshot — CAS semantics, up
     * to `maxAttempts` rounds. Readers concurrent with the merge keep
     * their resolved snapshot throughout. Returns count reconciliation
-    * stats. */
+    * stats, observed during the write: a commit runs one Spark action. */
   def upsert(spark: SparkSession, incoming: DataFrame, path: String,
       key: String, overwriteColumns: Option[Seq[String]] = None,
       outputPartitions: Int = 0, maxAttempts: Int = 5,
@@ -424,24 +480,28 @@ object MergeByKey {
         if (legacyDf.isDefined) legacyRootEntries(spark, path) else Seq.empty
       val existing: Option[DataFrame] =
         if (cur.isDefined) Some(readCommitted(spark, path)) else legacyDf
+      // fresh observations per attempt: a retry is a new write
+      val (observedIn, inObs) = observeRows(incoming)
       val merged = existing match {
-        case Some(e) => merge(e, incoming, key, overwriteColumns)
-        case None => incoming
+        case Some(e) => merge(e, observedIn, key, overwriteColumns)
+        case None => observedIn
       }
       // repeated merges otherwise accumulate shuffle-partition-many small
       // files per cycle; hash-repartitioning on the key also keeps rows
       // with the same key in one file (compact + predictable)
-      val out =
+      val (out, outObs) = observeRows(
         if (outputPartitions > 0) merged.repartition(outputPartitions, col(key))
-        else merged
+        else merged)
       val next = cur.getOrElse(-1L) + 1L
       val stage = new Path(s"$path/.stage-${java.util.UUID.randomUUID()}")
       out.write.mode(SaveMode.Overwrite).parquet(stage.toString)
-      // count BEFORE the flip: the incoming lineage may itself read the
-      // committed snapshot (e.g. a score column derived from the previous
-      // table version); versioning keeps those files intact until GC, but
-      // counting first also survives retain-window eviction
-      val incomingRows = incoming.count()
+      // counts resolve BEFORE the claim, so a recount (only if the
+      // observation is late) still sees what the write saw: the incoming
+      // lineage may itself read the committed snapshot, and the staged
+      // output has not moved yet
+      val incomingRows = observedRows(inObs)(incoming.count())
+      val mergedRows =
+        observedRows(outObs)(spark.read.parquet(stage.toString).count())
       val claimed = new Path(s"$path/v=$next")
       if (claimVersion(spark, stage, claimed)) {
         // Stale-claim recheck (r17 ADVICE, high): the claim can succeed
@@ -467,12 +527,12 @@ object MergeByKey {
           // commit record BEFORE the flip, while we still hold the claim
           // (nothing can commit in between), so every version behind the
           // head carries proof it was really committed — see readVersion
-          writeCommitRecord(spark, claimed)
+          writeCommitRecord(spark, claimed, out.schema)
           commitManifest(spark, path, next)
           gc(spark, path, next, retain)
           // the store gained a version: drop any cached listing of the root
           spark.catalog.refreshByPath(path)
-          return MergeStats(incomingRows, readCommitted(spark, path).count())
+          return MergeStats(incomingRows, mergedRows)
         }
       } else {
         // lost the race: discard the stage, wait for the winner's commit
@@ -514,7 +574,7 @@ object MergeByKey {
           if (attempt >= maxAttempts) throw new IllegalStateException(
             s"overwrite of $path lost the version claim $maxAttempts times")
         } else {
-          writeCommitRecord(spark, claimed)
+          writeCommitRecord(spark, claimed, df.schema)
           commitManifest(spark, path, next)
           gc(spark, path, next, retain)
           spark.catalog.refreshByPath(path)

@@ -7,7 +7,9 @@ import org.apache.spark.sql.SparkSession
   * shared SparkContext, restores the suite session afterwards. */
 class ExtensionsSpec extends SparkSpec {
 
-  test("extension-injected functions resolve from SQL") {
+  /** Runs `body` in a new session built with the extensions, then
+    * restores the suite session. */
+  private def withExtensions(body: SparkSession => Unit): Unit = {
     val base = spark // force TestSpark init first
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
@@ -19,7 +21,17 @@ class ExtensionsSpec extends SparkSpec {
       .withExtensions(new GraftExtensions())
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    try {
+    try body(ext)
+    finally {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      SparkSession.setDefaultSession(base)
+      SparkSession.setActiveSession(base)
+    }
+  }
+
+  test("extension-injected functions resolve from SQL") {
+    withExtensions { ext =>
       import ext.implicits._
       Seq((1L, Array(1.0f, 0.0f), Array(1.0f, 0.0f)),
         (2L, Array(1.0f, 0.0f), Array(0.0f, 1.0f)))
@@ -63,11 +75,32 @@ class ExtensionsSpec extends SparkSpec {
         "SELECT unicode_normalize(decode(unhex('63616665CC81'), 'utf-8'), 'NFC') n")
         .collect()(0).getString(0)
       assert(nfc == "caf\u00e9")
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
+    }
+  }
+
+  test("levenshtein_within from SQL matches the DataFrame form") {
+    withExtensions { ext =>
+      import ext.implicits._
+      Seq(("kitten", "sitting"), ("flaw", "lawn"), ("same", "same"),
+        ("", "abc"), ("abcdef", "ghijkl"), ("caf\u00e9", "cafe"),
+        (null, "x"))
+        .toDF("l", "r").createOrReplaceTempView("ext_pairs")
+      val viaSql = ext.sql(
+        "SELECT l, r, levenshtein_within(l, r, 3) d FROM ext_pairs")
+        .collect().map(r => (r.getString(0), r.getString(1)) -> r.get(2)).toMap
+      val viaColumn = ext.table("ext_pairs")
+        .select($"l", $"r", graft.expressions.GraftExpressions
+          .levenshtein_within($"l", $"r", 3).as("d"))
+        .collect().map(r => (r.getString(0), r.getString(1)) -> r.get(2)).toMap
+      assert(viaSql == viaColumn)
+      assert(viaSql(("kitten", "sitting")) == 3)
+      assert(viaSql(("abcdef", "ghijkl")) == -1)
+      assert(viaSql((null, "x")) == null)
+      val bad = intercept[Exception] {
+        ext.sql("SELECT levenshtein_within(l, r, length(l)) FROM ext_pairs")
+          .collect()
+      }
+      assert(bad.getMessage.contains("integer literal"))
     }
   }
 }

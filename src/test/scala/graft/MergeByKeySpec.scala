@@ -184,6 +184,8 @@ class MergeByKeySpec extends SparkSpec {
     val statsA = Await.result(sa, 120.seconds)
     val statsB = Await.result(sb, 120.seconds)
     assert(statsA.incomingRows == 1 && statsB.incomingRows == 1)
+    // the winner wrote one row; the loser's retry merged onto it
+    assert(Set(statsA.mergedRows, statsB.mergedRows) == Set(1L, 2L))
     // both rows landed: the loser re-merged against the winner's commit
     assert(MergeByKey.readCommitted(spark, dir).rowsSet ==
       Set(Seq("A", 1.0), Seq("B", 2.0)))
@@ -338,5 +340,133 @@ class MergeByKeySpec extends SparkSpec {
     }
     // no manifest was committed — the store is untouched for a human
     assert(MergeByKey.committedVersion(spark, dir) === None)
+  }
+
+  /** The stats of one upsert agree with recounting both sides. */
+  private def assertStats(stats: MergeByKey.MergeStats,
+      incoming: org.apache.spark.sql.DataFrame, dir: String): Unit = {
+    assert(stats.incomingRows == incoming.count(), s"incoming rows: $stats")
+    assert(stats.mergedRows == MergeByKey.readCommitted(spark, dir).count(),
+      s"merged rows: $stats")
+  }
+
+  test("upsert stats are observed during the write: first commit, merge, " +
+    "overwriteColumns, outputPartitions and legacy migration") {
+    val dir = Files.createTempDirectory("graft_stats").toString + "/t"
+    val first = Seq(("A", 1.0, "x"), ("B", 2.0, "y")).toDF("k", "v", "s")
+    val s0 = MergeByKey.upsert(spark, first, dir, "k")
+    assert(s0 == MergeByKey.MergeStats(2L, 2L))
+    assertStats(s0, first, dir)
+    val second = Seq(("B", 20.0, "z"), ("C", 3.0, "w")).toDF("k", "v", "s")
+    val s1 = MergeByKey.upsert(spark, second, dir, "k")
+    assert(s1 == MergeByKey.MergeStats(2L, 3L))
+    assertStats(s1, second, dir)
+    val third = Seq(("C", 30.0, "q"), ("D", 4.0, "r")).toDF("k", "v", "s")
+    val s2 = MergeByKey.upsert(spark, third, dir, "k",
+      overwriteColumns = Some(Seq("v")))
+    assert(s2 == MergeByKey.MergeStats(2L, 4L))
+    assertStats(s2, third, dir)
+    val wide = (1L to 200L).map(i => (s"K$i", i.toDouble, "p")).toDF("k", "v", "s")
+    val s3 = MergeByKey.upsert(spark, wide, dir, "k", outputPartitions = 3)
+    assert(s3 == MergeByKey.MergeStats(200L, 204L))
+    assertStats(s3, wide, dir)
+
+    val legacy = Files.createTempDirectory("graft_stats_legacy").toString + "/t"
+    Seq(("A", 1.0), ("B", 2.0)).toDF("k", "v").write.parquet(legacy)
+    val migrating = Seq(("B", 5.0), ("C", 3.0), ("D", 4.0)).toDF("k", "v")
+    val sl = MergeByKey.upsert(spark, migrating, legacy, "k")
+    assert(sl == MergeByKey.MergeStats(3L, 4L))
+    assertStats(sl, migrating, legacy)
+  }
+
+  test("empty incoming onto an existing store counts 0 rows in and keeps " +
+    "every committed row, whether or not the optimizer prunes the " +
+    "observed side") {
+    val dir = Files.createTempDirectory("graft_stats_empty").toString + "/t"
+    val base = Seq(("A", 1.0), ("B", 2.0)).toDF("k", "v")
+    MergeByKey.upsert(spark, base, dir, "k")
+    val local = Seq.empty[(String, Double)].toDF("k", "v")
+    val filtered = base.filter(lit(false))
+    Seq(local, filtered).zipWithIndex.foreach { case (empty, i) =>
+      val stats = MergeByKey.upsert(spark, empty, dir, "k")
+      assert(stats == MergeByKey.MergeStats(0L, 2L), s"case $i: $stats")
+      assertStats(stats, empty, dir)
+      assert(MergeByKey.committedVersion(spark, dir) === Some(i + 1L))
+      assert(MergeByKey.readCommitted(spark, dir).rowsSet ==
+        Set(Seq("A", 1.0), Seq("B", 2.0)))
+    }
+    // an empty first commit creates an empty store
+    val fresh = Files.createTempDirectory("graft_stats_fresh").toString + "/t"
+    assert(MergeByKey.upsert(spark, local, fresh, "k") ==
+      MergeByKey.MergeStats(0L, 0L))
+    assert(MergeByKey.readCommitted(spark, fresh).count() == 0)
+  }
+
+  test("one upsert onto an existing store is exactly one Spark action") {
+    val dir = Files.createTempDirectory("graft_one_action").toString + "/t"
+    MergeByKey.upsert(spark, Seq(("A", 1.0), ("B", 2.0)).toDF("k", "v"),
+      dir, "k")
+    val incoming = Seq(("B", 20.0), ("C", 3.0)).toDF("k", "v")
+    val (stats, counts) = SparkCounts.of(spark)(
+      MergeByKey.upsert(spark, incoming, dir, "k"))
+    assert(counts.actions == 1, s"actions: ${counts.actionNames}")
+    assert(stats == MergeByKey.MergeStats(2L, 3L))
+  }
+
+  test("readCommitted resolves a new version with no Spark job and the " +
+    "schema inference would give, for nested, array, map, decimal and " +
+    "timestamp columns") {
+    val dir = Files.createTempDirectory("graft_schema").toString + "/t"
+    val df = spark.range(4).select(
+      col("id").cast("string").as("k"),
+      struct(col("id").as("n"), array(col("id"), col("id") + 1).as("xs"))
+        .as("nested"),
+      array(struct((col("id") * 2).as("a"))).as("structs"),
+      map(col("id").cast("string"), col("id").cast("double")).as("m"),
+      (col("id") / 3).cast("decimal(12,4)").as("d"),
+      timestamp_seconds(col("id") * 86400).as("ts"),
+      to_date(timestamp_seconds(col("id") * 86400)).as("day"),
+      lit(null).cast("string").as("always_null"))
+    MergeByKey.upsert(spark, df, dir, "k")
+    MergeByKey.upsert(spark, df.limit(2), dir, "k")
+    val (read, counts) = SparkCounts.of(spark)(
+      MergeByKey.readCommitted(spark, dir))
+    assert(counts.jobs == 0, s"jobs started by readCommitted: ${counts.jobs}")
+    val inferred = spark.read.parquet(s"$dir/v=1")
+    assert(read.schema == inferred.schema)
+    assert(read.rowsSet == inferred.rowsSet)
+    // the retained prior version resolves the same way
+    val (prior, priorCounts) = SparkCounts.of(spark)(
+      MergeByKey.readVersion(spark, dir, 0L))
+    assert(priorCounts.jobs == 0)
+    assert(prior.schema == spark.read.parquet(s"$dir/v=0").schema)
+    // overwrite records the loaded frame's schema too
+    MergeByKey.overwrite(df, dir)
+    val (loaded, loadCounts) = SparkCounts.of(spark)(
+      MergeByKey.readCommitted(spark, dir))
+    assert(loadCounts.jobs == 0)
+    assert(loaded.schema == spark.read.parquet(s"$dir/v=2").schema)
+    assert(loaded.count() == 4)
+  }
+
+  test("a store whose commit records read `committed` still resolves, " +
+    "by schema inference") {
+    val dir = Files.createTempDirectory("graft_old_record").toString + "/t"
+    MergeByKey.upsert(spark, Seq(("A", 1.0)).toDF("k", "v"), dir, "k")
+    MergeByKey.upsert(spark, Seq(("B", 2.0)).toDF("k", "v"), dir, "k")
+    // rewrite both records the way stores committed before the schema
+    // was recorded hold them (drop the local-FS checksum sidecars first)
+    Seq("v=0", "v=1").foreach { v =>
+      new java.io.File(dir, s"$v/._graft_committed.crc").delete()
+      Files.writeString(new java.io.File(dir, s"$v/_graft_committed").toPath,
+        "committed")
+    }
+    assert(MergeByKey.readCommitted(spark, dir).rowsSet ==
+      Set(Seq("A", 1.0), Seq("B", 2.0)))
+    assert(MergeByKey.readVersion(spark, dir, 0L).rowsSet ==
+      Set(Seq("A", 1.0)))
+    // and the next commit merges onto it as usual
+    MergeByKey.upsert(spark, Seq(("C", 3.0)).toDF("k", "v"), dir, "k")
+    assert(MergeByKey.readCommitted(spark, dir).count() == 3)
   }
 }

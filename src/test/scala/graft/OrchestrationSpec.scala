@@ -119,4 +119,49 @@ class OrchestrationSpec extends SparkSpec {
     assert(stored.count() == 3)
     assert(stored.filter($"normalized_score_3m".isNotNull).count() == 3)
   }
+
+  test("each flow runs only its commits' writes as Spark actions") {
+    // Pinned actions per call, by the API that started them. A commit
+    // is one write ("command"); reading a CSV's header is "head" plus
+    // "rdd"; runFundamental adds the single needsGlobalLevel aggregate
+    // ("isEmpty"). An eager recount slipped into a flow fails here.
+    val dir = Files.createTempDirectory("graft_actions")
+    val wh = s"$dir/warehouse"
+    val techCsv = (Seq("Symbol,Sector,Industry,Price,Market capitalization," +
+      "Relative Strength Index (14) 1 day") ++
+      (1 to 12).map(i => s"S$i,Sec${i % 2},Ind${i % 3},${10 * i},${i}000000000,${40 + i}"))
+      .mkString("\n")
+    Files.writeString(dir.resolve("Technicals_2026-01-01.csv"), techCsv)
+    val fundaCsv = (Seq("Symbol,Sector,Industry,Price to earnings ratio") ++
+      (1 to 12).map(i => s"S$i,Sec${i % 2},Ind${i % 3},${5 + i}")).mkString("\n")
+    Files.writeString(dir.resolve("funda_2026-01-05.csv"), fundaCsv)
+    val sectors = Seq(("Sec0", "10%", "1,000"), ("Sec1", "−5%", "500"))
+      .toDF("sector", "change_pct", "market_cap")
+    def actions(body: => Any): Seq[String] =
+      SparkCounts.of(spark)(body)._2.actionNames
+    val calls = Seq(
+      "runTechnical (new stores)" -> actions(
+        Orchestration.runTechnical(spark, s"$dir/Technicals_*.csv", wh)),
+      "runTechnical (existing stores)" -> actions(
+        Orchestration.runTechnical(spark, s"$dir/Technicals_*.csv", wh)),
+      "runFundamental" -> actions(
+        Orchestration.runFundamental(spark, s"$dir/funda_*.csv", wh)),
+      "runGroupMomentum (new store)" -> actions(
+        Orchestration.runGroupMomentum(spark, sectors, wh, "sector_data", "sector")),
+      "runGroupMomentum (existing store)" -> actions(
+        Orchestration.runGroupMomentum(spark, sectors, wh, "sector_data", "sector")))
+    val csvHeader = Seq("head", "rdd")
+    val expected = Map(
+      "runTechnical (new stores)" -> (csvHeader ++ Seq("command", "command")),
+      "runTechnical (existing stores)" -> (csvHeader ++ Seq("command", "command")),
+      "runFundamental" -> (csvHeader ++ Seq("command", "isEmpty", "command")),
+      "runGroupMomentum (new store)" -> Seq("command"),
+      "runGroupMomentum (existing store)" -> Seq("command"))
+    val wrong = calls.filter { case (call, names) =>
+      names.sorted != expected(call).sorted
+    }
+    assert(wrong.isEmpty, wrong.map { case (call, names) =>
+      s"$call ran ${names.size} actions $names, expected ${expected(call)}"
+    }.mkString("; "))
+  }
 }

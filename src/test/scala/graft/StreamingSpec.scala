@@ -126,4 +126,39 @@ class StreamingSpec extends SparkSpec {
       assert(last.items("hot") <= 9L && last.items("hot") >= 9L - 14L / 3)
     } finally q.stop()
   }
+
+  test("mergeSink commits a micro-batch of only duplicates and the " +
+    "stream terminates") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_dup_batch")
+    val src = s"$root/feed"
+    val table = s"$root/warehouse/items"
+    new java.io.File(src).mkdirs()
+    val t0 = Timestamp.valueOf("2024-01-01 00:00:00")
+    val t1 = Timestamp.valueOf("2024-01-01 00:05:00")
+    // batch 1 repeats batch 0's keys inside the watermark: the dedup
+    // leaves the sink an empty micro-batch
+    Streams.stageBatchFiles(Seq(
+      ("u1", t0, "first", 0), ("u2", t0, "second", 0),
+      ("u1", t1, "again", 1), ("u2", t1, "again", 1))
+      .toDF("article_url", "event_ts", "headline", "b"), "b", src)
+    val stream = spark.readStream
+      .schema("article_url STRING, event_ts TIMESTAMP, headline STRING")
+      .option("maxFilesPerTrigger", "1").parquet(src)
+    val q = Streams.runAvailableNow(
+      Streams.mergeSink(
+        Streams.dedupByKey(stream, "article_url", "event_ts", "1 hour"),
+        table, "article_url"),
+      s"$root/ckpt")
+    try {
+      assert(q.awaitTermination(120000L), "the stream must terminate")
+      assert(q.exception.isEmpty, s"stream failed: ${q.exception}")
+      // both micro-batches committed a version
+      assert(graft.sinks.MergeByKey.committedVersion(spark, table)
+        .exists(_ >= 1L))
+      assert(graft.sinks.MergeByKey.readCommitted(spark, table)
+        .select($"article_url", $"headline").rowsSet ==
+        Set(Seq("u1", "first"), Seq("u2", "second")))
+    } finally q.stop()
+  }
 }

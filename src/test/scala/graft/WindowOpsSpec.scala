@@ -132,6 +132,27 @@ class WindowOpsSpec extends SparkSpec {
     assert(out(7L) == Some(100.0 * 5 / 6))
   }
 
+  test("needsGlobalLevel: null outer key, small outer group, or neither — " +
+    "in one Spark action") {
+    def df(rows: (String, String)*) = rows.toDF("seg", "nat")
+    val big = Seq.fill(5)(("A", "x")) ++ Seq.fill(6)(("B", "y"))
+    val cases = Seq(
+      "every outer group has minPeers rows" -> (df(big: _*), false),
+      "a null outer key" -> (df(big :+ ((null: String), "x"): _*), true),
+      "an outer group below minPeers" -> (df(big ++ Seq.fill(4)(("C", "z")): _*), true),
+      "no rows" -> (df(), false))
+    cases.foreach { case (what, (frame, expected)) =>
+      val (got, counts) = SparkCounts.of(spark)(
+        PeerPercentile.needsGlobalLevel(frame, Seq($"seg")))
+      assert(got == expected, what)
+      assert(counts.actions == 1, s"$what: ${counts.actionNames}")
+    }
+    // several outer keys: a null in any one of them falls through
+    val two = (Seq.fill(5)(("A", "x")) :+ (("A", null: String))).toDF("seg", "nat")
+    assert(PeerPercentile.needsGlobalLevel(two, Seq($"seg", $"nat"), minPeers = 1))
+    assert(!PeerPercentile.needsGlobalLevel(two.na.drop(), Seq($"seg", $"nat")))
+  }
+
   test("peer percentile: valuation rule (<=0 scores 0, peers filtered positive, inverted)") {
     val df = Seq(
       (1L, "g", Some(10.0)), (2L, "g", Some(20.0)), (3L, "g", Some(-3.0)),
