@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.{Window, WindowSpec}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** W3 — peer-group percentile with group-size fallback
@@ -23,37 +23,74 @@ import org.apache.spark.sql.functions._
   * With `rank()` over (partition ORDER BY m ASC NULLS FIRST):
   *   rank - 1 = #rows strictly before = #nulls + #non-null strictly less,
   * so strictLess = rank - 1 - (size - cntNonNull). Strictly-greater uses
-  * DESC NULLS FIRST symmetrically. Everything stays inside two shuffles
-  * (inner/outer partitioning; each extra metric only adds a sort within
-  * the same exchange) plus one single-partition exchange for the global
-  * fallback level.
+  * DESC NULLS FIRST symmetrically. One private formula (`score`) holds
+  * this arithmetic for both forms below.
   *
-  * Scale note: the global "all" fallback is a single-partition window. It
-  * exists to mirror the reference exactly; at 100 TB cluster scale the
-  * fallback level should be computed instead from a broadcast global
-  * aggregate (see `globalStats` variant) — the fallback population is by
-  * construction tiny (only rows whose sector has < minPeers members), so
-  * the driver-side cost is bounded.
+  * Two forms, one result (bit-identical):
+  *  - `percentile` is a Column, for a single metric. Each call brings its
+  *    own inner and outer windows, each ordered by its own metric, so a
+  *    plan that folds n of them in has about 2n shuffle exchanges: the
+  *    stacked Window nodes keep switching between the two partitionings.
+  *    Its global level is a single-partition window, and once the plan
+  *    has one, every other window runs in that one partition too.
+  *  - `percentiles` scores many metrics of a frame in one window pass
+  *    per level over long rows, so its plan has at most 3 exchanges plus
+  *    the join back, whatever the number of metrics.
+  *
+  * Scale note: the global "all" fallback exists to mirror the reference
+  * exactly; the fallback population is by construction tiny (only rows
+  * whose sector has < minPeers members), and `needsGlobalLevel` lets
+  * callers drop the level from the plan when no row can reach it.
   */
 object PeerPercentile {
 
-  /** Strict-less / strict-greater peer counts via rank arithmetic. */
-  private def pct(
-      m: Column, w: WindowSpec, size: Column, cntNonNull: Column,
-      higherIsBetter: Boolean): Column = {
-    val ordered =
-      if (higherIsBetter) w.orderBy(m.asc_nulls_first)
-      else w.orderBy(m.desc_nulls_first)
-    val strictBefore = rank().over(ordered) - 1 - (size - cntNonNull)
-    when(m.isNull, lit(null).cast("double"))
-      .when(cntNonNull < 2, lit(50.0))
-      .otherwise(lit(100.0) * strictBefore.cast("double") / cntNonNull.cast("double"))
+  /** One metric of `percentiles`: the values of `column`, scored into
+    * `out`. `valuation` implies lower-is-better, as in `percentile`. */
+  case class Scored(column: String, out: String,
+      higherIsBetter: Boolean = true, valuation: Boolean = false)
+
+  /** A row's view of one peer level: whether the row may use it
+    * (`usable`), the level's row count, its non-null count, and the
+    * row's `rank()` in scoring order with nulls first. */
+  private case class Level(usable: Column, size: Column, cnt: Column, rank: Column)
+
+  /** A keyed level is usable when the row's keys are non-null and the
+    * level has minPeers rows; the global level (no keys) always is. */
+  private def usable(keys: Seq[Column], size: Column, minPeers: Int): Column =
+    keys.map(_.isNotNull).reduceOption(_ && _).fold(lit(true))(_ && size >= minPeers)
+
+  /** The per-row percentile: `m` is the (peer-filtered) value, the first
+    * usable level of inner, outer, global scores it, and a loss-maker
+    * row scores 0.0. Without a global level a row that falls through
+    * scores null. */
+  private def score(m: Column, lossMaker: Column, inner: Level, outer: Level,
+      global: Option[Level]): Column = {
+    def pct(l: Level): Column = {
+      val strictBefore = l.rank - 1 - (l.size - l.cnt)
+      when(m.isNull, lit(null).cast("double"))
+        .when(l.cnt < 2, lit(50.0))
+        .otherwise(lit(100.0) * strictBefore.cast("double") / l.cnt.cast("double"))
+    }
+    when(lossMaker, lit(0.0)).otherwise(
+      when(inner.usable, pct(inner))
+        .when(outer.usable, pct(outer))
+        .otherwise(global.fold(lit(null).cast("double"))(pct)))
   }
+
+  private def levelName(inner: Column, outer: Column): Column =
+    when(inner, lit("inner")).when(outer, lit("outer")).otherwise(lit("all"))
+
+  /** Peer filter and direction shared by both forms: a valuation metric
+    * keeps only values > 0 as peers and scores lower-is-better. */
+  private def peerValue(metric: Column, valuation: Boolean): Column =
+    if (valuation) when(metric > 0, metric) else metric
 
   /** Percentile of `metric` with inner->outer->global fallback.
     * `valuation = true` applies the loss-maker rule (peers filtered > 0,
     * value <= 0 scores 0.0) and scores lower-is-better (inverted), which
     * is how the reference treats valuation ratios.
+    * `includeGlobal = false` drops the global level from the plan; use it
+    * only when `needsGlobalLevel` says no row reaches it.
     */
   def percentile(
       metric: Column,
@@ -63,34 +100,92 @@ object PeerPercentile {
       higherIsBetter: Boolean = true,
       valuation: Boolean = false,
       includeGlobal: Boolean = true): Column = {
-    val m = if (valuation) when(metric > 0, metric) else metric
-    val hib = if (valuation) false else higherIsBetter
-    val wI = Window.partitionBy(inner: _*)
-    val wO = Window.partitionBy(outer: _*)
-    def level(w: WindowSpec): Column =
-      pct(m, w, count(lit(1)).over(w), count(m).over(w), hib)
-    val sizeI = count(lit(1)).over(wI)
-    val sizeO = count(lit(1)).over(wO)
+    val m = peerValue(metric, valuation)
+    val hib = higherIsBetter && !valuation
     // Null peer-group keys fall through, matching the reference's
     // pd.notna(industry) guards (calfundamentalscore.py:168-176).
-    val innerKeysOk = inner.map(_.isNotNull).reduce(_ && _)
-    val outerKeysOk = outer.map(_.isNotNull).reduce(_ && _)
-    // The global level is a single-partition window; Spark evaluates
-    // every window in the plan for every row, so when the caller KNOWS
-    // no row falls through to 'all' (see `auto`), dropping it removes
-    // the one non-scalable exchange from the plan.
-    val globalLevel =
-      if (includeGlobal) level(Window.partitionBy())
-      else lit(null).cast("double")
-    val chosen = when(innerKeysOk && sizeI >= minPeers, level(wI))
-      .when(outerKeysOk && sizeO >= minPeers, level(wO))
-      .otherwise(globalLevel)
-    if (valuation)
-      when(metric.isNull, lit(null).cast("double"))
-        .when(metric <= 0, lit(0.0))
-        .otherwise(chosen)
-    else chosen
+    def level(keys: Seq[Column]): Level = {
+      val w = Window.partitionBy(keys: _*)
+      val size = count(lit(1)).over(w)
+      val ordered = w.orderBy(if (hib) m.asc_nulls_first else m.desc_nulls_first)
+      Level(usable(keys, size, minPeers), size, count(m).over(w), rank().over(ordered))
+    }
+    score(m, if (valuation) metric <= 0 else lit(false),
+      level(inner), level(outer),
+      if (includeGlobal) Some(level(Nil)) else None)
   }
+
+  /** Percentiles of several metrics of `df`, each exactly as `percentile`
+    * computes it, added as `Scored.out` columns, then the row's fallback
+    * level as `levelCol`, named as `peerLevel` names it. Metrics are
+    * scored as doubles.
+    *
+    * `key` must be unique and non-null: the scores are pivoted back by
+    * `groupBy(key)` and left-joined onto `df` on it.
+    *
+    * Plan: the metrics are unpivoted into long rows
+    * (key, level keys, k, a, b, loss-maker flag) — `a` holds a
+    * higher-is-better value, `b` a lower-is-better one (valuation values
+    * only when > 0), the other is null — and each level runs
+    * ONE window partitioned by (k, level keys), ordered
+    * `a ASC NULLS FIRST, b DESC NULLS FIRST`, for the row count, the
+    * non-null count and `rank()`. That order is each metric's own
+    * scoring order. Then one `groupBy(key)` pivots the scores back.
+    * With AQE off the plan has, whatever the number of metrics, 3 shuffle
+    * exchanges without the global level (inner, outer, pivot) and 2 with
+    * it: the global window partitions by `k` alone, which also serves
+    * the inner and outer windows, so all levels then run in at most as
+    * many tasks as there are metrics.
+    */
+  def percentiles(
+      df: DataFrame,
+      key: String,
+      metrics: Seq[Scored],
+      inner: Seq[String],
+      outer: Seq[String],
+      minPeers: Int = 5,
+      includeGlobal: Boolean = true,
+      levelCol: String = "peer_level"): DataFrame =
+    if (metrics.isEmpty)
+      df.withColumn(levelCol, peerLevel(inner.map(col), outer.map(col), minPeers))
+    else {
+      val (pk, k, a, b, lm, pct, lvl) =
+        ("__pp_key", "__pp_k", "__pp_a", "__pp_b", "__pp_lm", "__pp_pct", "__pp_lvl")
+      val noValue = lit(null).cast("double")
+      val rows = metrics.zipWithIndex.map { case (s, i) =>
+        val v = col(s.column).cast("double")
+        val peer = peerValue(v, s.valuation)
+        val hib = s.higherIsBetter && !s.valuation
+        struct(lit(i).as(k),
+          (if (hib) peer else noValue).as(a),
+          (if (hib) noValue else peer).as(b),
+          (if (s.valuation) v <= 0 else lit(false)).as(lm))
+      }
+      val levelKeys = (inner ++ outer).distinct
+      val long = df.select(
+        (col(key).as(pk) +: levelKeys.map(col) :+ inline(array(rows: _*))): _*)
+      val m = coalesce(col(a), col(b))
+      def level(keys: Seq[String]): Level = {
+        val w = Window.partitionBy((col(k) +: keys.map(col)): _*)
+          .orderBy(col(a).asc_nulls_first, col(b).desc_nulls_first)
+        // the counts take the rank's partitioning and order with a whole-
+        // partition frame, so each level is a single Window operator
+        val whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        val size = count(lit(1)).over(whole)
+        Level(usable(keys.map(col), size, minPeers), size, count(m).over(whole),
+          rank().over(w))
+      }
+      val (li, lo) = (level(inner), level(outer))
+      val scored = long.select(col(pk), col(k),
+        score(m, col(lm), li, lo, if (includeGlobal) Some(level(Nil)) else None).as(pct),
+        levelName(li.usable, lo.usable).as(lvl))
+      val pivots = metrics.indices.map(i =>
+        max(when(col(k) === i, col(pct))).as(metrics(i).out)) :+
+        max(col(lvl)).as(levelCol)
+      val wide = scored.groupBy(pk).agg(pivots.head, pivots.tail: _*)
+      val base = df.drop(metrics.map(_.out) :+ levelCol: _*)
+      base.join(wide, base(key) === wide(pk), "left").drop(pk)
+    }
 
   /** True if any row would land on the global 'all' fallback — i.e. some
     * row's outer group is smaller than minPeers or has a null outer key.
@@ -111,12 +206,8 @@ object PeerPercentile {
     * sector 69 / all 7). */
   def peerLevel(
       inner: Seq[Column], outer: Seq[Column], minPeers: Int = 5): Column = {
-    val sizeI = count(lit(1)).over(Window.partitionBy(inner: _*))
-    val sizeO = count(lit(1)).over(Window.partitionBy(outer: _*))
-    val innerKeysOk = inner.map(_.isNotNull).reduce(_ && _)
-    val outerKeysOk = outer.map(_.isNotNull).reduce(_ && _)
-    when(innerKeysOk && sizeI >= minPeers, lit("inner"))
-      .when(outerKeysOk && sizeO >= minPeers, lit("outer"))
-      .otherwise(lit("all"))
+    def ok(keys: Seq[Column]) =
+      usable(keys, count(lit(1)).over(Window.partitionBy(keys: _*)), minPeers)
+    levelName(ok(inner), ok(outer))
   }
 }

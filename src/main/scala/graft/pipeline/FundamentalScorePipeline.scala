@@ -12,8 +12,12 @@ import graft.operators.{PeerPercentile, RankOps, WeightedScore}
   * category.
   *
   * The reference's per-row `iterrows` percentile loop (one pandas scan of
-  * the peer frame per stock×metric, O(n²·m)) becomes three shared window
-  * partitionings; each metric adds only a sort within the same exchange.
+  * the peer frame per stock×metric, O(n²·m)) becomes one window pass per
+  * peer level over all metrics at once (`PeerPercentile.percentiles`):
+  * with AQE off the plan has 3 shuffle exchanges (industry, sector, the
+  * pivot back by symbol; 2 when the global level is needed) whatever the
+  * number of metrics, where folding in 18 `percentile` columns planned 36
+  * (1 with the global level, which put every window in one partition).
   */
 object FundamentalScorePipeline {
 
@@ -49,8 +53,6 @@ object FundamentalScorePipeline {
   private def pctCol(m: Metric): String = s"${m.name}_percentile"
 
   def apply(df: DataFrame, minPeers: Int = 5): DataFrame = {
-    val inner = Seq(col("industry"))
-    val outer = Seq(col("sector"))
     val present = all.filter(m => df.columns.contains(m.name))
 
     // 1. caps (ref apply_caps :183-193)
@@ -63,15 +65,15 @@ object FundamentalScorePipeline {
     // the loss-maker rule also applies; plain lower-is-better metrics
     // (debt_to_equity) invert without peer filtering. The global 'all'
     // level enters the plan only if some row can actually reach it.
-    val g = PeerPercentile.needsGlobalLevel(capped, outer, minPeers)
-    val withPct = present.foldLeft(capped) { (d, m) =>
-      d.withColumn(pctCol(m),
-        round(PeerPercentile.percentile(col(m.name), inner, outer,
-          minPeers = minPeers, higherIsBetter = m.higherIsBetter,
-          valuation = m.valuation, includeGlobal = g), 2))
-    }
-    val withLevel = withPct.withColumn("peer_level",
-      PeerPercentile.peerLevel(inner, outer, minPeers))
+    // `symbol`, the merge key of stock_data, is the unique key the
+    // scores pivot back on.
+    val g = PeerPercentile.needsGlobalLevel(capped, Seq(col("sector")), minPeers)
+    val withLevel = PeerPercentile.percentiles(capped, "symbol",
+      present.map(m => PeerPercentile.Scored(m.name, pctCol(m),
+        m.higherIsBetter, m.valuation)),
+      inner = Seq("industry"), outer = Seq("sector"), minPeers = minPeers,
+      includeGlobal = g)
+      .withColumns(present.map(m => pctCol(m) -> round(col(pctCol(m)), 2)).toMap)
 
     // 3. category scores: weight-renormalized average of the available
     // percentiles, 2dp (ref calculate_category_score :206-228)

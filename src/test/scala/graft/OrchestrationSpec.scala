@@ -125,6 +125,9 @@ class OrchestrationSpec extends SparkSpec {
     // is one write ("command"); reading a CSV's header is "head" plus
     // "rdd"; runFundamental adds the single needsGlobalLevel aggregate
     // ("isEmpty"). An eager recount slipped into a flow fails here.
+    // runFundamental's scheduler jobs are pinned too: under AQE each
+    // shuffle exchange and broadcast of the plan is one job, so an extra
+    // exchange or an eager job slipped into the flow fails here.
     val dir = Files.createTempDirectory("graft_actions")
     val wh = s"$dir/warehouse"
     val techCsv = (Seq("Symbol,Sector,Industry,Price,Market capitalization," +
@@ -137,19 +140,19 @@ class OrchestrationSpec extends SparkSpec {
     Files.writeString(dir.resolve("funda_2026-01-05.csv"), fundaCsv)
     val sectors = Seq(("Sec0", "10%", "1,000"), ("Sec1", "−5%", "500"))
       .toDF("sector", "change_pct", "market_cap")
-    def actions(body: => Any): Seq[String] =
-      SparkCounts.of(spark)(body)._2.actionNames
-    val calls = Seq(
-      "runTechnical (new stores)" -> actions(
+    def counts(body: => Any): SparkCounts = SparkCounts.of(spark)(body)._2
+    val counted = Seq(
+      "runTechnical (new stores)" -> counts(
         Orchestration.runTechnical(spark, s"$dir/Technicals_*.csv", wh)),
-      "runTechnical (existing stores)" -> actions(
+      "runTechnical (existing stores)" -> counts(
         Orchestration.runTechnical(spark, s"$dir/Technicals_*.csv", wh)),
-      "runFundamental" -> actions(
+      "runFundamental" -> counts(
         Orchestration.runFundamental(spark, s"$dir/funda_*.csv", wh)),
-      "runGroupMomentum (new store)" -> actions(
+      "runGroupMomentum (new store)" -> counts(
         Orchestration.runGroupMomentum(spark, sectors, wh, "sector_data", "sector")),
-      "runGroupMomentum (existing store)" -> actions(
+      "runGroupMomentum (existing store)" -> counts(
         Orchestration.runGroupMomentum(spark, sectors, wh, "sector_data", "sector")))
+    val calls = counted.map { case (call, c) => call -> c.actionNames }
     val csvHeader = Seq("head", "rdd")
     val expected = Map(
       "runTechnical (new stores)" -> (csvHeader ++ Seq("command", "command")),
@@ -163,5 +166,7 @@ class OrchestrationSpec extends SparkSpec {
     assert(wrong.isEmpty, wrong.map { case (call, names) =>
       s"$call ran ${names.size} actions $names, expected ${expected(call)}"
     }.mkString("; "))
+    val fundamentalJobs = counted.toMap.apply("runFundamental").jobs
+    assert(fundamentalJobs == 15, s"runFundamental ran $fundamentalJobs jobs")
   }
 }

@@ -90,6 +90,44 @@ class PipelineSpec extends SparkSpec {
     assert(out("A") == 0.0 && out("B") == 20.0)
   }
 
+  test("fundamental pipeline: shuffle count does not grow with the metric count") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // 4 sectors of 6 rows over 8 industries: no row reaches the global
+    // level, so it stays out of the plan
+    val base = (0 until 24).map(i => (s"S$i", s"sec${i % 4}", s"ind${i % 8}"))
+      .toDF("symbol", "sector", "industry")
+    def shuffles(ms: Seq[FundamentalScorePipeline.Metric]): Int = {
+      val df = ms.zipWithIndex.foldLeft(base) { case (d, (m, j)) =>
+        d.withColumn(m.name, (hash($"symbol", lit(j)) % 100).cast("double"))
+      }
+      FundamentalScorePipeline(df).queryExecution.executedPlan
+        .collect { case e: ShuffleExchangeExec => e }.size
+    }
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val all = shuffles(FundamentalScorePipeline.all)
+      val one = shuffles(FundamentalScorePipeline.all.take(1))
+      assert(all == one, s"18 metrics plan $all shuffles, 1 metric plans $one")
+      assert(all <= 3, s"$all shuffle exchanges without the global level")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+  }
+
+  test("fundamental pipeline: no metric column -> peer_level, no percentiles, " +
+    "neutral blend") {
+    val df = Seq(("A", "S", "I"), ("B", "S", "I"), ("C", "S", "J"),
+      ("D", "T", "K")).toDF("symbol", "sector", "industry")
+    val out = FundamentalScorePipeline(df, minPeers = 2)
+    assert(out.columns.toSeq == Seq("symbol", "sector", "industry", "peer_level",
+      "quality_score", "growth_score", "valuation_score", "health_score",
+      "fundamental_score"))
+    val rows = out.collect().map(r => r.getString(0) -> r).toMap
+    assert(rows.map { case (s, r) => s -> r.getAs[String]("peer_level") } ==
+      Map("A" -> "inner", "B" -> "inner", "C" -> "outer", "D" -> "all"))
+    assert(rows.values.forall(r => (4 to 7).forall(r.isNullAt)))
+    assert(rows.values.forall(_.getAs[Double]("fundamental_score") == 50.0))
+  }
+
   test("fundamental ranks within category, null category -> rank 0") {
     val scored = Seq(
       ("A", Some("Large Cap"), 90.0), ("B", Some("Large Cap"), 95.0),

@@ -181,6 +181,68 @@ class WindowOpsSpec extends SparkSpec {
     assert(out(1L) == Some(50.0))
   }
 
+  test("peer percentiles: the long-format pass equals per-metric percentile " +
+    "columns bit for bit, with and without the global level") {
+    val n = Option.empty[Double]
+    // (sym, sector, industry, roe hib, pe valuation, de lower-is-better, thin hib)
+    val df = Seq(
+      // S1/I1: 6 rows -> inner; ties and nulls; pe <= 0; thin has 1 valid peer
+      ("s01", Some("S1"), Some("I1"), Some(10.0), Some(12.0), Some(1.0), Some(5.0)),
+      ("s02", Some("S1"), Some("I1"), Some(20.0), Some(-3.0), Some(2.0), n),
+      ("s03", Some("S1"), Some("I1"), Some(20.0), Some(0.0), Some(2.0), n),
+      ("s04", Some("S1"), Some("I1"), n, Some(8.0), n, n),
+      ("s05", Some("S1"), Some("I1"), Some(30.0), Some(8.0), Some(0.5), n),
+      ("s06", Some("S1"), Some("I1"), Some(15.0), n, Some(3.0), n),
+      // singleton industries and a null industry fall back to sector S1
+      ("s07", Some("S1"), Some("I2"), Some(25.0), Some(20.0), Some(1.5), Some(7.0)),
+      ("s08", Some("S1"), Some("I3"), Some(-5.0), Some(4.0), Some(0.1), n),
+      ("s09", Some("S1"), Option.empty[String], Some(12.0), Some(-1.0), Some(1.0), Some(9.0)),
+      // sector S2 has 4 rows -> global level
+      ("s10", Some("S2"), Some("I4"), Some(1.0), Some(3.0), Some(4.0), n),
+      ("s11", Some("S2"), Some("I4"), Some(1.0), Some(3.0), n, Some(1.0)),
+      ("s12", Some("S2"), Some("I5"), n, n, Some(0.2), n),
+      ("s13", Some("S2"), Some("I5"), Some(40.0), Some(50.0), Some(2.0), Some(2.0)),
+      // a null sector key reaches the global level too
+      ("s14", Option.empty[String], Some("I6"), Some(18.0), Some(0.5), Some(0.7), n),
+      ("s15", Option.empty[String], Option.empty[String], Some(22.0), Some(7.0), n, Some(3.0))
+    ).toDF("sym", "sec", "ind", "roe", "pe", "de", "thin")
+    val metrics = Seq(
+      PeerPercentile.Scored("roe", "roe_p"),
+      PeerPercentile.Scored("pe", "pe_p", higherIsBetter = false, valuation = true),
+      PeerPercentile.Scored("de", "de_p", higherIsBetter = false),
+      PeerPercentile.Scored("thin", "thin_p"))
+    val outs = metrics.map(_.out) :+ "lvl"
+    def bits(d: org.apache.spark.sql.DataFrame): Map[String, Seq[Any]] =
+      d.select(("sym" +: outs).map(col): _*).collect().map { r =>
+        r.getString(0) -> (1 until r.length).map(i => r.get(i) match {
+          case x: Double => java.lang.Double.doubleToRawLongBits(x)
+          case x => x
+        })
+      }.toMap
+    Seq(true, false).foreach { g =>
+      val frame = PeerPercentile.percentiles(df, "sym", metrics,
+        inner = Seq("ind"), outer = Seq("sec"), includeGlobal = g,
+        levelCol = "lvl")
+      val cols = df.select($"*" +: metrics.map(m =>
+        PeerPercentile.percentile(col(m.column), Seq($"ind"), Seq($"sec"),
+          higherIsBetter = m.higherIsBetter, valuation = m.valuation,
+          includeGlobal = g).as(m.out)) :+
+        PeerPercentile.peerLevel(Seq($"ind"), Seq($"sec")).as("lvl"): _*)
+      assert(frame.columns.toSeq == df.columns.toSeq ++ outs)
+      assert(bits(frame) == bits(cols), s"includeGlobal=$g")
+      // the fixture reaches every rule it is meant to cover
+      val out = frame.collect().map(r => r.getAs[String]("sym") -> r).toMap
+      def p(s: String, c: String) = Option(out(s).getAs[Any](c))
+      assert(p("s01", "thin_p") == Some(50.0), "fewer than 2 valid peers")
+      assert(p("s02", "pe_p") == Some(0.0) && p("s03", "pe_p") == Some(0.0))
+      assert(p("s02", "roe_p") == p("s03", "roe_p"), "ties share a score")
+      assert(p("s04", "roe_p") == None)
+      assert(Seq("s07", "s08", "s09").forall(s => p(s, "lvl") == Some("outer")))
+      assert(Seq("s10", "s14", "s15").forall(s => p(s, "lvl") == Some("all")))
+      assert(p("s15", "roe_p").isDefined == g)
+    }
+  }
+
   test("bandByRank: thresholds, null value -> null band, deterministic ties") {
     val df = (1L to 600L).map(i => (i, Some(1000.0 - (i - 1)))).toDF("id", "v")
       .union(Seq((601L, Option.empty[Double])).toDF("id", "v"))
